@@ -22,8 +22,11 @@ into two classes:
   costs one fact scan instead of N (tools/scan_audit.py audits this).
 * **Corpus-proportional frames** — the dedup shingle/band signature
   tables, the (doc, trigram) instance frame (the single largest entry,
-  text/lm_quality.py), the ANN normed-vector corpus, the selection
-  scoring table. These grow linearly with the corpus.
+  text/lm_quality.py), the ANN normed-vector corpus, the IVF index's
+  inverted lists (one row per vector with its embedding, shared by
+  ann_ivf_topk and SemDeDup — similarity/ann.ivf_index; its K-row
+  centroid table is dimension-sized), the selection scoring table.
+  These grow linearly with the corpus.
 
 DataFrame caches store compressed columnar batches at MEMORY_AND_DISK:
 under pressure in this single-JVM engine (8 GiB driver, session.py)

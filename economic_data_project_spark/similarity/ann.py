@@ -483,11 +483,22 @@ def ann_cosine_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   (posexplode -> SUM(DECIMAL)/COUNT per (cluster, dim)) so both
 #   engines rebuild bit-identical centroids — a distributed k-means
 #   iteration expressed relationally;
-# - assignment/probe ranking tiebreak on id.
+# - assignment/probe ranking: cosine DESC NULLS LAST, tiebreak on id.
 # The oracle runs the SAME algorithm, so the contract is exact over
 # what IVF promises (recall within probed cells), not a fuzzy
 # approximation. At 100 TB: centroids broadcast, assignment is
 # map-side argmax, the probe join shuffles only (cluster_id) lists.
+#
+# The index is built ONCE per (corpus, K) by :func:`ivf_index` and
+# shared: two session caches, the K-row centroid table and the
+# cluster-partitioned inverted lists (vector, norm, label and winning
+# centroid cosine per row). ann_ivf_topk probes the centroids and
+# scores straight from the lists; SemDeDup's one-level path reads its
+# member frame as a projection of the same lists. Both builders
+# construct identical analyzed plans, so whichever runs second in a
+# session reads the first one's fill (CacheManager matches by plan,
+# no Python-side memo) whenever both pick the same K — every corpus of
+# at most 16,384 vectors.
 # --------------------------------------------------------------------------
 
 _IVF_K = 16
@@ -611,18 +622,22 @@ ORDER BY query_id, rank
 """
 
 
-# cosine of a corpus row against a Lloyd centroid row (bound columns:
-# embedding/vnorm from the corpus, centroid/cnorm from kmeans_once).
+# cosine of a corpus row against a Lloyd centroid row, as a template:
+# corpus columns (embedding, vnorm) are bare, centroid columns
+# (centroid, cnorm from kmeans_once) are written pre-qualified as
+# ``{s}.<col>`` and bound to the packed centroid struct at render time
+# (see _scored_cents_expr).
 _COS_CENTROID = (
-    DOT_SPARK.format(a="embedding", b="centroid") + " / (vnorm * cnorm)"
+    DOT_SPARK.format(a="embedding", b="{s}.centroid")
+    + " / (vnorm * {s}.cnorm)"
 )
 
 
 def ivf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normed vector corpus with labels, cached (r9): an index build
     reads this frame many times (seed centroids, both assignment
-    passes, the Lloyd dimension explode, the query slice, the
-    candidate verify side) and the HOF norm fold re-ran with each —
+    passes, the Lloyd dimension explode, the inverted-list join, the
+    query slice) and the HOF norm fold re-ran with each —
     10 embeddings scans in the cold IVF plan. Corpus-sized like the
     dedup shingle cache (text/dedup._shingled, the documented
     precedent): at scale this is the materialized vector+norm table
@@ -642,21 +657,24 @@ def ivf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _scored_cents_expr(
-    cent_cols: list, cos_expr: str, cluster_col: str
+    vectors: DataFrame, cents: DataFrame, cos_tmpl: str, cluster_col: str
 ) -> str:
     """SQL for the per-vector (cosine, cluster) candidate array over a
-    packed ``__cents`` array-of-structs column: centroid column
-    references inside ``cos_expr`` are qualified to the lambda struct
-    (token replace on the known centroid column names — none of the
-    current cosine expressions shares a token with a corpus column)."""
-    import re
-
-    qualified = cos_expr
-    for c in cent_cols:
-        qualified = re.sub(rf"\b{re.escape(c)}\b", f"__s.{c}", qualified)
+    packed ``__cents`` array-of-structs column. ``cos_tmpl`` writes
+    every centroid column reference as ``{s}.<col>``; rendering binds
+    ``{s}`` to the lambda struct, so no text is rewritten after the
+    fact. A centroid column that shares a name with a vector column
+    is rejected: a template that forgot its ``{s}.`` would otherwise
+    bind the vector side's column silently instead of failing to
+    resolve."""
+    shared = sorted(set(vectors.columns) & set(cents.columns))
+    if shared:
+        raise ValueError(
+            f"centroid columns {shared} collide with vector columns"
+        )
     return (
-        f"transform(__cents, __s -> struct(({qualified}) AS c,"
-        f" CAST(__s.{cluster_col} AS BIGINT) AS cluster))"
+        f"transform(__cents, __s -> struct(({cos_tmpl.format(s='__s')})"
+        f" AS c, CAST(__s.{cluster_col} AS BIGINT) AS cluster))"
     )
 
 
@@ -669,19 +687,24 @@ def _pack_cents(cents: DataFrame) -> DataFrame:
     )
 
 
-# ordering used by every assignment surface: cosine DESC, cluster ASC.
-# Spark's binary comparisons on doubles are nan-safe (NaN compares
-# largest, NaN = NaN), matching the window orderBy semantics the fold
-# replaced.
+# ordering used by every assignment surface: cosine DESC NULLS LAST,
+# then cluster ASC — the oracle's `ORDER BY cos DESC, cluster` (DuckDB
+# sorts NULL last). NULL is handled explicitly because a comparison
+# with NULL is neither true nor false. Spark's binary comparisons on
+# doubles are nan-safe (NaN compares largest, NaN = NaN), matching the
+# window orderBy semantics the fold replaced.
 _CENT_CMP = (
-    "(l, r) -> CASE WHEN l.c > r.c THEN -1 WHEN r.c > l.c THEN 1"
+    "(l, r) -> CASE"
+    " WHEN l.c IS NULL AND r.c IS NOT NULL THEN 1"
+    " WHEN r.c IS NULL AND l.c IS NOT NULL THEN -1"
+    " WHEN l.c > r.c THEN -1 WHEN r.c > l.c THEN 1"
     " WHEN l.cluster < r.cluster THEN -1"
     " WHEN r.cluster < l.cluster THEN 1 ELSE 0 END"
 )
 
 
 def argmin_assign(
-    vectors: DataFrame, cents: DataFrame, cos_expr: str, cluster_col: str
+    vectors: DataFrame, cents: DataFrame, cos_tmpl: str, cluster_col: str
 ) -> DataFrame:
     """Nearest-centroid assignment: broadcast the (K-bounded) centroid
     set packed as ONE array row, fold per vector to the argmax cosine
@@ -692,23 +715,28 @@ def argmin_assign(
     hashpartitioning(vec_id) exchange plus sort PER assignment pass —
     so "map-side at scale" was only half true. The aggregate fold
     keeps assignment genuinely map-side: zero exchange, zero sort, the
-    corpus never moves. Tie-break and NaN ordering are identical to
-    the window (argmax c, then min cluster); collect_list's packing
-    order cannot change the result because the fold's preference is a
-    strict total order over (c, cluster).
+    corpus never moves. The fold's preference is the strict total
+    order of _CENT_CMP over (c, cluster): a real cosine beats NULL,
+    NULL ties NULL and the smaller cluster id wins, so collect_list's
+    packing order cannot change the result. A row whose every cosine
+    is NULL (null or ragged embedding) lands on the smallest cluster
+    id with NULL ``c``, as the oracle's window puts it.
 
     Returns (vec_id, cluster, c) — ``c`` is the winning cosine, which
-    the fold computes anyway; SemDeDup's member frame reads it as the
-    centroid cosine instead of re-joining the centroid table (a
-    consumer whose broadcast no longer dedups against the packed one —
-    the whole Lloyd pipeline executed twice until it was dropped,
-    measured 4.1s -> below on dedup_semantic_semdedup). Callers that
-    only need the label prune the column for free."""
-    arr = _scored_cents_expr(cents.columns, cos_expr, cluster_col)
+    the fold computes anyway; the inverted lists (:func:`ivf_index`)
+    keep it as the centroid cosine instead of re-joining the centroid
+    table (a consumer whose broadcast no longer dedups against the
+    packed one — the whole Lloyd pipeline executed twice until it was
+    dropped, measured 4.1s -> below on dedup_semantic_semdedup).
+    Callers that only need the label prune the column for free."""
+    arr = _scored_cents_expr(vectors, cents, cos_tmpl, cluster_col)
     best = (
         f"aggregate({arr}, CAST(NULL AS STRUCT<c: DOUBLE,"
         " cluster: BIGINT>),"
         " (__a, __p) -> CASE WHEN __a IS NULL THEN __p"
+        " WHEN __p.c IS NULL THEN IF(__a.c IS NULL"
+        " AND __p.cluster < __a.cluster, __p, __a)"
+        " WHEN __a.c IS NULL THEN __p"
         " WHEN __p.c > __a.c OR (__p.c = __a.c"
         " AND __p.cluster < __a.cluster) THEN __p"
         " ELSE __a END)"
@@ -731,16 +759,17 @@ def argmin_assign(
 def topn_probes(
     queries: DataFrame,
     cents: DataFrame,
-    cos_expr: str,
+    cos_tmpl: str,
     cluster_col: str,
     n: int,
 ) -> DataFrame:
     """Top-n nearest centroids per query vector (probe lists), as
     (query_id, cluster) — same map-side pack/sort/slice shape as
     :func:`argmin_assign` (r16), replacing the crossJoin + window
-    probe_rank filter and its exchange+sort. Order: cosine DESC then
-    cluster ASC, exactly the window's; slice tolerates n > K."""
-    arr = _scored_cents_expr(cents.columns, cos_expr, cluster_col)
+    probe_rank filter and its exchange+sort. Order: cosine DESC NULLS
+    LAST then cluster ASC, exactly the window's; slice tolerates
+    n > K."""
+    arr = _scored_cents_expr(queries, cents, cos_tmpl, cluster_col)
     sliced = f"slice(array_sort({arr}, {_CENT_CMP}), 1, {int(n)})"
     return (
         queries.crossJoin(F.broadcast(_pack_cents(cents)))
@@ -752,16 +781,13 @@ def topn_probes(
     )
 
 
-def kmeans_once(
-    corpus: DataFrame, k: int
-) -> tuple[DataFrame, DataFrame]:
-    """Deterministic one-Lloyd-step k-means over a normed corpus
-    (vec_id, embedding, vnorm): seed = the K SMALLEST vec_ids, one
-    relational Lloyd iteration with decimal-exact per-dimension means,
-    final assignment tiebroken on cluster id. Returns
-    ``(centroids [cluster, centroid, cnorm], final_assign [vec_id,
-    cluster])``. Mirrored bit-for-bit by :func:`kmeans_cte_duck` so
-    oracle contracts are exact (see the IVF header comment)."""
+def _lloyd_centroids(corpus: DataFrame, k: int) -> DataFrame:
+    """Centroids ``[cluster, centroid, cnorm]`` of the deterministic
+    one-Lloyd-step k-means over a normed corpus (vec_id, embedding,
+    vnorm): seed = the K SMALLEST vec_ids, one relational Lloyd
+    iteration with decimal-exact per-dimension means. Mirrored
+    bit-for-bit by :func:`kmeans_cte_duck` so oracle contracts are
+    exact (see the IVF header comment)."""
     # centroid seeds = the K SMALLEST vec_ids (TakeOrderedAndProject —
     # per-partition K-heaps, never a global sort), not `vec_id < K`:
     # with an offset/sparse id space the literal filter selects fewer
@@ -779,8 +805,8 @@ def kmeans_once(
         )
     )
     cos0 = (
-        DOT_SPARK.format(a="embedding", b="cent0")
-        + " / (vnorm * norm0)"
+        DOT_SPARK.format(a="embedding", b="{s}.cent0")
+        + " / (vnorm * {s}.norm0)"
     )
     assign0 = argmin_assign(corpus, init, cos0, "cluster0")
 
@@ -795,7 +821,7 @@ def kmeans_once(
             F.col("val").cast("double").alias("val"),
         )
     )
-    centroids = (
+    return (
         dims.groupBy("cluster", "i")
         .agg(
             (
@@ -814,8 +840,64 @@ def kmeans_once(
             "cnorm", F.expr(NORM_SPARK.format(v="centroid"))
         )
     )
-    final_assign = argmin_assign(corpus, centroids, _COS_CENTROID, "cluster")
-    return centroids, final_assign
+
+
+def kmeans_once(
+    corpus: DataFrame, k: int
+) -> tuple[DataFrame, DataFrame]:
+    """Uncached one-Lloyd-step k-means (:func:`_lloyd_centroids`) plus
+    the final assignment, tiebroken on cluster id. Returns
+    ``(centroids [cluster, centroid, cnorm], final_assign [vec_id,
+    cluster, c])``. The two-level SemDeDup tier uses it for its
+    coarse cells; index consumers go through :func:`ivf_index`."""
+    centroids = _lloyd_centroids(corpus, k)
+    return centroids, argmin_assign(
+        corpus, centroids, _COS_CENTROID, "cluster"
+    )
+
+
+def cluster_keyed_cache(df: DataFrame) -> DataFrame:
+    """Hash-partition a per-vector frame by ``cluster`` and register it
+    as a session cache. Cluster is the key every reader joins on (the
+    probe join, SemDeDup's within-cluster self-join), so readers of
+    the cache plan those joins with no exchange; the map-side argmin
+    fold would otherwise leave the frame on the scan's (single-split)
+    partitioning and starve the downstream tasks. defaultParallelism
+    like spread_scan — scale-parameterised, not a local constant."""
+    n = df.sparkSession.sparkContext.defaultParallelism
+    return register_session_cache(df.repartition(n, "cluster").cache())
+
+
+def ivf_index(corpus: DataFrame, k: int) -> tuple[DataFrame, DataFrame]:
+    """The IVF index over a normed corpus (:func:`ivf_corpus`), built
+    once per (corpus, K) and shared by every consumer (IVF header
+    comment). Returns two session caches:
+
+    - centroids ``[cluster, centroid, cnorm]``: K rows, the one-step
+      Lloyd result; probes and the list assignment both read it, so
+      the Lloyd chain runs once per fill.
+    - inverted lists ``[vec_id, cluster, embedding, vnorm, label,
+      cc]``: one row per vector, hash-partitioned by cluster, ``cc``
+      the winning centroid cosine of the assignment fold. A probe
+      scores its candidates straight from the lists, and SemDeDup's
+      member frame is a projection of them.
+
+    No Python-side memo: two calls with the same corpus and K build
+    identical analyzed plans, so CacheManager serves the second
+    caller from the first caller's fill."""
+    centroids = register_session_cache(_lloyd_centroids(corpus, k).cache())
+    assign = argmin_assign(corpus, centroids, _COS_CENTROID, "cluster")
+    lists = cluster_keyed_cache(
+        assign.join(corpus, "vec_id").select(
+            "vec_id",
+            "cluster",
+            "embedding",
+            "vnorm",
+            "label",
+            F.col("c").alias("cc"),
+        )
+    )
+    return centroids, lists
 
 
 @query("ann_ivf_topk", oracle=_ivf_oracle())
@@ -825,10 +907,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sizes K and nprobe driver-side — documented exempt from the
     # zero-jobs gate (tests/test_plans._BUILD_JOB_EXEMPT, same
     # precedent as dedup_embedding_cosine's routing probe). The probe's
-    # scan fills the session cache the six downstream corpus consumers
-    # read, so it costs no extra pass overall. Sparse-id safety needs
-    # no id bound here — it comes entirely from the orderBy/limit
-    # seeding below.
+    # scan fills the session cache the index build reads, so it costs
+    # no extra pass overall. Sparse-id safety needs no id bound here —
+    # it comes entirely from the orderBy/limit seeding.
     n_corpus = int(corpus.count())
     if n_corpus <= _IVF_SCALE_MIN:
         ivf_k, ivf_nprobe = _IVF_K, _IVF_NPROBE
@@ -837,34 +918,28 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         ivf_k = max(_IVF_K, min(_IVF_K_CAP, math.isqrt(n_corpus)))
         ivf_nprobe = max(_IVF_NPROBE, ivf_k // 32)
-    centroids, final_assign = kmeans_once(corpus, ivf_k)
+    centroids, lists = ivf_index(corpus, ivf_k)
 
     queries = corpus.where(F.col("vec_id") < _N_QUERIES)
     probes = topn_probes(
         queries, centroids, _COS_CENTROID, "cluster", ivf_nprobe
-    )
-    cand = (
-        probes.join(final_assign, on="cluster")
-        .select("query_id", "vec_id")
-        .where(F.col("vec_id") != F.col("query_id"))
     )
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("vnorm").alias("q_norm"),
     )
-    x = corpus.select(
-        "vec_id",
-        F.col("embedding").alias("x_emb"),
-        F.col("vnorm").alias("x_norm"),
-        "label",
-    )
     cos_qx = (
-        DOT_SPARK.format(a="q_emb", b="x_emb") + " / (q_norm * x_norm)"
+        DOT_SPARK.format(a="q_emb", b="embedding") + " / (q_norm * vnorm)"
     )
+    # the probe list (queries x nprobe rows) is broadcast against the
+    # cluster-partitioned lists: candidates are scored where they sit,
+    # with no exchange — each list row already carries its vector,
+    # norm and label.
     scored = (
-        cand.join(F.broadcast(q), on="query_id")
-        .join(x, on="vec_id")
+        lists.join(F.broadcast(probes), on="cluster")
+        .where(F.col("vec_id") != F.col("query_id"))
+        .join(F.broadcast(q), on="query_id")
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),

@@ -436,7 +436,8 @@ def ann_ivf_topk_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cos_vc = (
-        _IDOT_SPARK.format(a="qv", b="c_qv") + " / (qnorm * c_qnorm)"
+        _IDOT_SPARK.format(a="qv", b="{s}.c_qv")
+        + " / (qnorm * {s}.c_qnorm)"
     )
     # r16: map-side fold/sort assignment + probe lists (see
     # ann.argmin_assign / ann.topn_probes) — the crossJoin + window

@@ -109,13 +109,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_session_cache
 from ..functions.ta import emit, series_window, sql_emit
 from ..functions.vectors import DOT_DUCK, DOT_SPARK
 from ..registry import query
 from .ann import (
     _IVF_K_CAP,
+    cluster_keyed_cache,
     ivf_corpus,
+    ivf_index,
     kmeans_cte_duck,
     kmeans_once,
 )
@@ -233,8 +234,9 @@ def _subcluster_kernel(pdf):
     cell size the sizing policy produces (~256k at the K cap).
 
     Invalid (null/ragged) embeddings keep the cell's sub_id 0 —
-    mirroring the one-level argmin, where a NULL cosine row ties every
-    centroid and the cluster-id tie-break hands it the smallest id —
+    mirroring the one-level argmin, where every cosine of such a row is
+    NULL, NULLs tie each other and the cluster-id tie-break hands it
+    the smallest id (ann._CENT_CMP order, the oracle's NULLS LAST) —
     with NULL (None, not NaN) centroid-cosine, matching the one-level
     path's NULL; they are never compared, never dropped (uniform-dim
     contract, and the GEMM kernel excludes them the same way)."""
@@ -530,40 +532,23 @@ def dedup_semantic_semdedup(
     else:
         k = min(_IVF_K_CAP, n_corpus // _TARGET_CLUSTER)
     if n_corpus <= _TWO_LEVEL_MIN:
-        # r16: the centroid cosine IS the winning cosine the argmin
-        # fold already computes (ann.argmin_assign returns it as `c`),
-        # so the old broadcast(centroids) re-join is gone — that
-        # consumer's broadcast no longer deduplicated against the
-        # packed-centroids broadcast inside the fold, so the whole
-        # Lloyd pipeline (explode + two group-bys + assignment)
-        # executed TWICE per build (in-lane A/B vs the pre-fold
-        # worktree: 2.73s -> 4.12s before this fix).
-        centroids, assign = kmeans_once(corpus, k)
-        member = assign.join(corpus, "vec_id").select(
-            "vec_id",
-            "cluster",
-            "embedding",
-            "vnorm",
-            F.col("c").alias("cc"),
+        # one-level: the member frame is a projection of the shared IVF
+        # inverted lists (ann.ivf_index) — already cached, one row per
+        # vector, hash-partitioned by CLUSTER, with the centroid cosine
+        # `cc` the assignment fold computed. Cluster IS the pair join's
+        # key, so both self-join sides read the cache with no exchange,
+        # and at K = 16 (every corpus up to _SCALE_MIN) ann_ivf_topk
+        # reads the same fill. At scale this is the materialized
+        # (vector, cluster, centroid-cosine) assignment table a SemDeDup
+        # pass writes once.
+        _, lists = ivf_index(corpus, k)
+        member = lists.select(
+            "vec_id", "cluster", "embedding", "vnorm", "cc"
         )
     else:
-        member = _member_two_level(corpus, k)
-    # cached: the member frame feeds both sides of the pair compare
-    # plus the final verdict left-join (3 reads); cluster-keyed, one
-    # row per vector. At scale this is the materialized (vector,
-    # cluster, centroid-cosine) assignment table a SemDeDup pass
-    # writes once. r16: explicitly hash-partitioned by CLUSTER before
-    # the cache — the map-side argmin fold leaves member on the scan's
-    # (single-split) partitioning, which starved the downstream pair
-    # compare, and cluster IS the pair join's key, so both self-join
-    # sides read the cache pre-partitioned and the join plans with NO
-    # exchange (guide §2.4). defaultParallelism like spread_scan —
-    # scale-parameterised, not a local constant.
-    member = register_session_cache(
-        member.repartition(
-            spark.sparkContext.defaultParallelism, "cluster"
-        ).cache()
-    )
+        # two-level: same cluster-keyed cache shape, filled from the
+        # coarse-cell NumPy sub-clustering instead of the index.
+        member = cluster_keyed_cache(_member_two_level(corpus, k))
     dups = (
         _dups_hof(member)
         if n_corpus <= _SCALE_MIN
