@@ -201,8 +201,12 @@ def _dups_hof(member: DataFrame) -> DataFrame:
         F.expr(DOT_SPARK.format(a="emb_a", b="emb_b"))
         / (F.col("norm_a") * F.col("norm_b"))
     )
+    # Both sides are the same cached frame, so AQE's size-based build
+    # side is a tie broken by whichever fill stats it reads first; it
+    # flipped between runs and recompiled the join's classes. The hint
+    # pins the build side (n <= _SCALE_MIN, well under a broadcast).
     return (
-        a.join(b, F.col("cluster_a") == F.col("cluster_b"))
+        a.join(F.broadcast(b), F.col("cluster_a") == F.col("cluster_b"))
         .where(
             (F.col("id_a") != F.col("id_b"))
             & (cos_ab >= F.lit(_EPS))

@@ -97,6 +97,94 @@ def test_upsert_merge_semantics(spark, wh):
     assert rows == {1: ("a", 10.0), 2: ("B", 99.0), 3: ("c", 30.0)}
 
 
+def test_upsert_null_key_parts_never_match(spark, wh):
+    base = spark.createDataFrame(
+        [(1, None, "old"), (2, "x", "old")], "a INT, b STRING, v STRING"
+    )
+    wh.write_table(base, "t")
+    updates = spark.createDataFrame(
+        [(1, None, "new"), (2, "x", "new")], "a INT, b STRING, v STRING"
+    )
+    wh.upsert(updates, "t", ["a", "b"])
+    rows = sorted((r.a, r.b, r.v) for r in wh.table("t").collect())
+    # (1, NULL) is not equal to (1, NULL): both rows stay
+    assert rows == [(1, None, "new"), (1, None, "old"), (2, "x", "new")]
+
+
+def test_upsert_keeps_duplicate_staged_keys(spark, wh):
+    wh.write_table(spark.createDataFrame([(1, "a"), (2, "b")], ["id", "v"]), "t")
+    updates = spark.createDataFrame([(2, "B1"), (2, "B2"), (3, "c")], ["id", "v"])
+    wh.upsert(updates, "t", ["id"])
+    rows = sorted((r.id, r.v) for r in wh.table("t").collect())
+    assert rows == [(1, "a"), (2, "B1"), (2, "B2"), (3, "c")]
+
+
+def test_upsert_widens_types_like_union_by_name(spark, wh):
+    base = spark.createDataFrame([(1, 10, "a")], "id INT, n INT, v STRING")
+    wh.write_table(base, "t")
+    # n arrives wider, v is missing (NULL-padded) and id is re-staged
+    updates = spark.createDataFrame([(1, 2**40), (2, 5)], "id INT, n BIGINT")
+    wh.upsert(updates, "t", ["id"])
+    out = wh.table("t")
+    assert dict(out.dtypes) == {"id": "int", "n": "bigint", "v": "string"}
+    rows = sorted((r.id, r.n, r.v) for r in out.collect())
+    assert rows == [(1, 2**40, None), (2, 5, None)]
+
+
+def test_upsert_partitioned(spark, wh):
+    base = spark.createDataFrame(
+        [("aa", date(2020, 1, 1), 1.0), ("bb", date(2020, 1, 1), 2.0)],
+        ["code", "d", "x"],
+    )
+    wh.write_table(base, "t", partition_by=["code"])
+    updates = spark.createDataFrame(
+        [("aa", date(2020, 1, 1), 9.0), ("aa", date(2020, 1, 2), 3.0)],
+        ["code", "d", "x"],
+    )
+    wh.upsert(updates, "t", ["code", "d"], partition_by=["code"])
+    rows = sorted((r.code, str(r.d), r.x) for r in wh.table("t").collect())
+    assert rows == [
+        ("aa", "2020-01-01", 9.0),
+        ("aa", "2020-01-02", 3.0),
+        ("bb", "2020-01-01", 2.0),
+    ]
+
+
+def test_upsert_evaluates_staged_plan_once(spark, wh):
+    from pyspark.sql.types import LongType
+
+    wh.write_table(spark.createDataFrame([(i, "a") for i in range(5)], ["id", "v"]), "t")
+    calls = spark.sparkContext.accumulator(0)
+
+    def bump(i):
+        calls.add(1)
+        return i
+
+    staged = spark.createDataFrame([(3, "b"), (4, "b"), (9, "b")], ["id", "v"]).select(
+        F.udf(bump, LongType())("id").alias("id"), "v"
+    )
+    wh.upsert(staged, "t", ["id"])
+    rows = sorted((r.id, r.v) for r in wh.table("t").collect())
+    assert rows == [(0, "a"), (1, "a"), (2, "a"), (3, "b"), (4, "b"), (9, "b")]
+    assert calls.value == 3
+
+
+def test_upsert_swap_clears_interrupted_leftovers(spark, wh):
+    import os
+
+    wh.write_table(spark.createDataFrame([(1, "a")], ["id", "v"]), "t")
+    path = wh.table_path("t")
+    # leftovers of an upsert that died mid-write and of one that died
+    # after moving the live dir aside but before removing it
+    os.makedirs(path + "__staging")
+    open(os.path.join(path + "__staging", "part-junk.parquet"), "w").close()
+    os.makedirs(path + "__old")
+    wh.upsert(spark.createDataFrame([(2, "b")], ["id", "v"]), "t", ["id"])
+    assert sorted((r.id, r.v) for r in wh.table("t").collect()) == [(1, "a"), (2, "b")]
+    assert not os.path.exists(path + "__staging")
+    assert not os.path.exists(path + "__old")
+
+
 def test_upsert_creates_when_absent(spark, wh):
     df = spark.createDataFrame([(1, "a")], ["id", "v"])
     wh.upsert(df, "fresh", ["id"])

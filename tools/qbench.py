@@ -7,7 +7,8 @@ Usage:
   python tools/qbench.py --all            # every HEADLINE query
   python tools/qbench.py --longdoc name   # time against the longdoc corpus
 
-Prints one line per query per rep plus a median summary. This is a
+Prints one line per query with its median, every rep's seconds and the
+generated classes each rep compiled. This is a
 measurement tool only — the driver contract lives in bench.py.
 """
 
@@ -27,7 +28,10 @@ from economic_data_project_spark.caches import (  # noqa: E402
     free_session_caches,
     lazy_builds,
 )
-from economic_data_project_spark.session import get_spark  # noqa: E402
+from economic_data_project_spark.session import (  # noqa: E402
+    codegen_compilations,
+    get_spark,
+)
 
 
 def alternating_ab(spark, arms, n: int = 9, sink=None):
@@ -42,7 +46,8 @@ def alternating_ab(spark, arms, n: int = 9, sink=None):
     (session caches + SQL cache freed) and executes through the noop
     sink. The BUILD is inside the timed region, exactly like bench.py
     (construction-reduction changes must show up here too). Returns
-    {arm: [seconds...]} and prints medians.
+    {arm: [seconds...]} and prints medians, with the generated classes
+    each rep compiled (a warm rep that compiles is not steady state).
 
     This box fabricates 1.5-2.5x swings on identical code between
     COLD runs (BENCH r13-r15 run_totals) — never adjudicate a code
@@ -50,12 +55,14 @@ def alternating_ab(spark, arms, n: int = 9, sink=None):
     """
     names = list(arms)
     res = {a: [] for a in names}
+    compiled = {a: [] for a in names}
     for rep in range(n):
         order = names if rep % 2 == 0 else list(reversed(names))
         for arm in order:
             free_session_caches()
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"ab:{arm}#{rep}")
+            c0 = codegen_compilations(spark)
             t0 = time.perf_counter()
             df = arms[arm]()
             if sink is None:
@@ -63,9 +70,11 @@ def alternating_ab(spark, arms, n: int = 9, sink=None):
             else:
                 sink(df)
             res[arm].append(round(time.perf_counter() - t0, 3))
+            compiled[arm].append(codegen_compilations(spark) - c0)
     for a in names:
         print(
-            f"{a}: median={statistics.median(res[a]):.3f} runs={res[a]}",
+            f"{a}: median={statistics.median(res[a]):.3f} runs={res[a]}"
+            f" compiled={compiled[a]}",
             flush=True,
         )
     return res
@@ -116,16 +125,22 @@ def main() -> None:
                 fh.write(plan)
         if args.n <= 0:  # plans-only mode
             continue
-        ts = []
+        ts, compiled = [], []
         for _ in range(args.n):
             free_session_caches()
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"qbench:{name}")
+            c0 = codegen_compilations(spark)
             t0 = time.perf_counter()
             df = qs[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             ts.append(round(time.perf_counter() - t0, 3))
-        print(f"{name}: median={statistics.median(ts):.3f} runs={ts}", flush=True)
+            compiled.append(codegen_compilations(spark) - c0)
+        print(
+            f"{name}: median={statistics.median(ts):.3f} runs={ts}"
+            f" compiled={compiled}",
+            flush=True,
+        )
     spark.stop()
 
 
