@@ -19,13 +19,10 @@ onto Delta/Iceberg ``MERGE INTO`` — the upsert here is the engine-neutral
 join-merge plan (anti-join survivors + new rows), which is exactly what a
 MERGE executes physically when every matched row is replaced.
 
-Scale notes: upsert writes the staged rows once, then appends the target
-rows whose keys it did not stage, found by broadcasting the staged keys
-(the target is scanned, never shuffled). At 100 TB the staged keys
-outgrow a broadcast, and the target should be partitioned
-(``partition_by``) so the rewrite touches only affected partitions
-(dynamic partition overwrite), mirroring incremental-model behavior
-(SURVEY.md §2.1).
+Scale notes: upsert shuffles both sides once on the key; at 100 TB the
+target should be partitioned (``partition_by``) so the rewrite touches
+only affected partitions (dynamic partition overwrite), mirroring
+incremental-model behavior (SURVEY.md §2.1).
 """
 
 from __future__ import annotations
@@ -300,32 +297,20 @@ class Warehouse:
                 f"columns {missing} not in target table {name}"
             )
         staged = self._align(df, target.columns)
-        # Both halves are written in the merged (unionByName-widened)
-        # schema, so the files of one table agree on every column type.
-        schema = target.unionByName(staged).schema
+        survivors = target.join(
+            staged.select(*key_columns).distinct(), key_columns, "left_anti"
+        )
+        merged = survivors.unionByName(staged)
         # Parquet source can't overwrite in place while reading itself —
         # stage to a sibling dir, then swap (what a transactional format
         # does under the hood with its log).
         import shutil
 
         tmp = path + "__staging"
-
-        def write(frame: DataFrame, mode: str) -> None:
-            frame = frame.select(
-                *[F.col(f.name).cast(f.dataType) for f in schema.fields]
-            )
-            w = frame.write.mode(mode)
-            if partition_by:
-                w = w.partitionBy(*partition_by)
-            w.parquet(tmp)
-
-        # The staged rows are written once and the survivors' anti-join
-        # reads their keys back from those files, so the staged plan runs
-        # once and the target is never shuffled. An equi-join: NULL key
-        # parts never match, and duplicate staged keys are all kept.
-        write(staged, "overwrite")
-        keys = self.spark.read.schema(schema).parquet(tmp).select(*key_columns)
-        write(target.join(F.broadcast(keys), key_columns, "left_anti"), "append")
+        w = merged.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(tmp)
         old = path + "__old"
         if os.path.exists(old):  # stale marker from an interrupted swap
             shutil.rmtree(old)

@@ -150,25 +150,6 @@ def test_upsert_partitioned(spark, wh):
     ]
 
 
-def test_upsert_evaluates_staged_plan_once(spark, wh):
-    from pyspark.sql.types import LongType
-
-    wh.write_table(spark.createDataFrame([(i, "a") for i in range(5)], ["id", "v"]), "t")
-    calls = spark.sparkContext.accumulator(0)
-
-    def bump(i):
-        calls.add(1)
-        return i
-
-    staged = spark.createDataFrame([(3, "b"), (4, "b"), (9, "b")], ["id", "v"]).select(
-        F.udf(bump, LongType())("id").alias("id"), "v"
-    )
-    wh.upsert(staged, "t", ["id"])
-    rows = sorted((r.id, r.v) for r in wh.table("t").collect())
-    assert rows == [(0, "a"), (1, "a"), (2, "a"), (3, "b"), (4, "b"), (9, "b")]
-    assert calls.value == 3
-
-
 def test_upsert_swap_clears_interrupted_leftovers(spark, wh):
     import os
 
