@@ -55,9 +55,6 @@ def test_tune_session_warns_once_on_small_cache(spark, monkeypatch):
         warnings.simplefilter("always")
         session.tune_session(spark)
         session.tune_session(spark)
-    assert [str(w.message) for w in seen if "maxEntries" in str(w.message)] == [
-        f"spark.sql.codegen.cache.maxEntries is {CODEGEN_CACHE_ENTRIES}, below the"
-        f" engine's working set of {CODEGEN_CACHE_ENTRIES * 2}: repeated queries"
-        " will recompile their generated classes. It is a static conf; set it"
-        " where the session is built."
-    ]
+    msgs = [str(w.message) for w in seen if "maxEntries" in str(w.message)]
+    assert len(msgs) == 1
+    assert f"maxEntries is {CODEGEN_CACHE_ENTRIES}, below" in msgs[0]

@@ -8,8 +8,8 @@ Usage:
   python tools/qbench.py --longdoc name   # time against the longdoc corpus
 
 Prints one line per query with its median, every rep's seconds and the
-generated classes each rep compiled. This is a
-measurement tool only — the driver contract lives in bench.py.
+generated classes each rep compiled. This is a measurement tool only —
+the driver contract lives in bench.py.
 """
 
 from __future__ import annotations
